@@ -94,11 +94,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column | str) -> Column:
-    col = F.col(text) if isinstance(text, str) else text
-    return F.length(col)
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Fraction of characters that are sentence punctuation."""
     col = F.col(text) if isinstance(text, str) else text
@@ -112,12 +107,6 @@ def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Co
     sw = stopwords or STOPWORDS_EN
     hits = F.size(F.filter(toks, lambda x: x.isin(sw)))
     return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def avg_token_length(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
-    return total / F.greatest(F.size(toks), F.lit(1))
 
 
 def quality_score(text: Column | str) -> Column:

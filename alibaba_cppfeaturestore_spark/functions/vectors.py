@@ -71,11 +71,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diffs = F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
-
-
 def quantize_int8(v: Column) -> Column:
     """Scalar int8 quantization: struct(scale float, q array<tinyint>)
     with q = round(x / scale), scale = max|x| / 127.

@@ -7,7 +7,8 @@ north-star scope. Design target is the 100 TB case:
 - exact dedup: single shuffle on a 64/256-bit content hash, not the text.
 - MinHash-LSH: shingle → k minhashes → b bands; candidate pairs come from
   a groupBy on (band, band_hash) — only docs sharing a band bucket are
-  compared, so the join is |bucket|² per bucket, never |corpus|².
+  compared, so the pair expansion is |bucket|² per bucket, never
+  |corpus|².
 - SimHash: 64-bit signature; banding into 16-bit chunks gives candidates
   for hamming-distance verification (dups with distance ≤ 3 must share a
   chunk by pigeonhole).
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import char_shingles, tokens, winnow_fingerprints
+from ..functions.text import _let, char_shingles, tokens, winnow_fingerprints
 from .ranks import register_persisted
 
 
@@ -150,32 +151,6 @@ def minhash_signature(
     )
 
 
-def minhash_bands(
-    signature: Column, bands: int, rows_per_band: int, portable: bool = False
-) -> Column:
-    """Hash each band of the signature → array<struct<band:int,bucket:long>>.
-    ``portable=True`` buckets with :func:`portable_hash60` over the same
-    comma-joined band string (DuckDB: ``string_agg(v, ',' ORDER BY i)``)."""
-    bucket_hash = portable_hash60 if portable else F.xxhash64
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                bucket_hash(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(signature, b * rows_per_band + r + 1).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Jaccard similarity of two DISTINCT arrays (set semantics — callers
     must pre-``array_distinct``; doing it here would rebuild the hash set
@@ -197,17 +172,10 @@ def minhash_lsh_duplicates(
     jaccard_threshold: float = 0.8,
     max_bucket_size: int | None = 10_000,
     portable: bool = False,
-    prune_verify_texts: bool = False,
 ) -> DataFrame:
-    """Candidate generation via LSH banding + exact-Jaccard verification.
-    ``prune_verify_texts``: shingle only candidate rows in the verify
-    stage — enable at scale / low duplicate density (see
-    ``_exact_verify`` for the measured tradeoff; output identical).
-
-    Returns duplicate pairs ``(id_a, id_b, jaccard_sim)`` with id_a < id_b.
-    Scale shape: signatures are per-row expressions; candidates come from a
-    shuffle on (band, bucket); verification re-shingles only candidate
-    rows. No corpus-wide cross join anywhere.
+    """Near-duplicate pairs ``(id_a, id_b, jaccard_sim)``, id_a < id_b,
+    via LSH banding + exact shingle-Jaccard verification. No corpus-wide
+    cross join anywhere.
 
     Band geometry matters: with ``b`` bands of ``r`` rows the candidate
     threshold is ≈ (1/b)^(1/r); the default 4×8 (≈0.84) is tuned to
@@ -219,43 +187,44 @@ def minhash_lsh_duplicates(
     (boilerplate/empty docs) contributes m² pairs, so one hot key can
     dominate the whole job at scale. Buckets above the cap are dropped
     (their members are still candidates via their other bands); set None
-    to disable. The cap also bounds the per-task memory of the
-    collect_list below (≤ cap × (8 B id + num_hashes × 8 B sig) per
-    group row — ~2.7 MB at the 10 k default).
+    to disable. The cap also bounds the per-task memory of the bucket
+    member lists (≤ cap × (8 B id + num_hashes × 8 B sig) per group row
+    — ~2.7 MB at the 10 k default).
 
-    Candidate generation is ONE groupBy (band, bucket) → collect_list →
-    per-bucket pair expansion with the signature screen evaluated
-    inline, replacing the earlier index self-join. The self-join shape
-    needed the band index persisted (both join sides), a window-function
-    bucket-size cap (extra shuffle), two join exchanges, and a separate
-    screen pass over materialized (sig_a, sig_b) pairs; this shape is a
-    single shuffle of (id, sig) keyed by bucket, the cap is a free
-    ``size(ms)`` filter, and sub-threshold pairs die inside the
-    projection without ever being exchanged. Pair volume is identical
-    (Σ|bucket|², the LSH guarantee); only the machinery around it is
-    gone — with the verify-stage spread fix below, the full pipeline
-    measured 3.5 s → 2.3 s at sf0.1 with byte-identical output.
+    The pipeline:
 
-    Shingling is ONE persisted pass (r13, guide §2.3: compute the
-    expensive projection once, shuffle/reuse the small thing): the
-    corpus used to be shingled THREE times — once feeding the
-    signature aggregation and once per verify join side (Spark
-    compiles the two sides independently). char_shingles dominates
-    executor CPU (~200 ops/char), so the shared ``(id, sh)`` persist
-    cut the query's task-time ~35% (24 s → 15.5 s at sf0.1) and wall
-    −7% at 32 cores / −14% at 8 cores (interleaved same-JVM A/B; the
-    gap widens as cores drop because the saved CPU stops hiding behind
-    idle threads — the driver's low-core scaling run is the case that
-    matters). The round-4 "persist is neutral-to-worse" measurement
-    (see ``_exact_verify``) only ever persisted the VERIFY pass (2→1);
-    sharing with the signature pass too (3→1) is what flips the sign.
+    1. shingle the corpus ONCE into a persisted ``(id, sh)`` frame that
+       feeds both the signature aggregation and both verify join sides
+       (char_shingles dominates executor CPU at ~200 ops/char; sharing
+       the pass cut task-time ~35% at sf0.1);
+    2. :func:`minhash_bucket_groups` — one groupBy (band, bucket) →
+       member lists, singleton and over-cap buckets dropped by ``size``;
+    3. :func:`_bucket_pair_screen` — per-bucket pair expansion with the
+       signature-agreement screen evaluated inside the projection, so
+       sub-threshold pairs are never exchanged;
+    4. :func:`_exact_verify` — exact Jaccard over the shared shingles.
+
     The persist is an intermediate of THIS job, released by the
     harness's ``clearCache()`` between attempts — never a cross-run
     cache.
     """
+    sh = _shingle_once(df, text_col, id_col, shingle_size)
+    grouped = minhash_bucket_groups(
+        df, text_col, id_col, num_hashes, bands, shingle_size,
+        max_bucket_size, portable=portable, _shingled=sh,
+    )
+    est = _bucket_pair_screen(grouped, num_hashes, jaccard_threshold)
+    return _exact_verify(est, sh, jaccard_threshold)
+
+
+def _shingle_once(
+    df: DataFrame, text_col: str, id_col: str, shingle_size: int
+) -> DataFrame:
+    """Persisted ``(id, sh)`` shingle sets, shared by the band-index
+    signature aggregation and the exact-verify join sides."""
     from pyspark import StorageLevel
 
-    sh = register_persisted(
+    return register_persisted(
         _spread(df)
         .select(
             F.col(id_col).alias("id"),
@@ -264,15 +233,6 @@ def minhash_lsh_duplicates(
             ).alias("sh"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    grouped = minhash_bucket_groups(
-        df, text_col, id_col, num_hashes, bands, shingle_size,
-        max_bucket_size, portable=portable, _shingled=sh,
-    )
-    est = _bucket_pair_screen(grouped, num_hashes, jaccard_threshold)
-    return _exact_verify(
-        est, None, shingle_size, jaccard_threshold,
-        prune_texts=prune_verify_texts, shingled=sh,
     )
 
 
@@ -289,15 +249,23 @@ def minhash_bucket_groups(
 ) -> DataFrame:
     """LSH buckets with ≥2 members as ``(band, bucket, ms)`` where ``ms``
     is the member list ``array<struct<id, sig>>`` — the candidate-pair
-    source for ``minhash_lsh_duplicates``. Singleton buckets (the vast
-    majority of a real corpus) are filtered before any pair math;
-    buckets above ``max_bucket_size`` are dropped (skew guard).
-    ``_shingled`` passes a pre-computed shingle frame through to
-    :func:`minhash_band_index` (see there)."""
+    source for ``minhash_lsh_duplicates``. ``_shingled`` passes a
+    pre-computed shingle frame through to :func:`minhash_band_index`
+    (see there); the grouping itself is :func:`_group_buckets`."""
     banded = minhash_band_index(
         df, text_col, id_col, num_hashes, bands, shingle_size,
         portable=portable, _shingled=_shingled,
     )
+    return _group_buckets(banded, max_bucket_size, "id", "sig")
+
+
+def _group_buckets(
+    banded: DataFrame, max_bucket_size: int | None, *members: str
+) -> DataFrame:
+    """Group band-index rows by (band, bucket) into ``ms`` lists of
+    ``struct(*members)``. Singleton buckets (the vast majority of a real
+    corpus) are filtered before any pair math; buckets above
+    ``max_bucket_size`` are dropped (skew guard)."""
     # Sentinel signatures ([p]*num_hashes — empty/null/too-short texts,
     # which all share one bucket per band) can never verify: no shingles
     # ⇒ exact Jaccard 0. Dropping them BEFORE grouping is output-
@@ -308,7 +276,7 @@ def minhash_bucket_groups(
     banded = banded.filter(F.element_at("sig", 1) < F.lit(_MINHASH_PRIME).cast("long"))
     grouped = (
         banded.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct("id", "sig")).alias("ms"))
+        .agg(F.collect_list(F.struct(*members)).alias("ms"))
         .filter(F.size("ms") >= 2)
     )
     if max_bucket_size is not None:
@@ -316,55 +284,80 @@ def minhash_bucket_groups(
     return grouped
 
 
-def _bucket_pair_screen(
-    grouped: DataFrame, num_hashes: int, jaccard_threshold: float
-) -> DataFrame:
-    """Expand each bucket's member list into ordered pairs (id_a < id_b)
-    with the signature-agreement screen applied INLINE: the fraction of
-    agreeing signature components estimates Jaccard with
-    σ ≈ √(j(1-j)/k), so a 3σ margin below the threshold rejects only
-    (almost surely) sub-threshold pairs — 32 long comparisons per pair,
-    evaluated inside the projection, so rejected pairs are never
-    exchanged. dropDuplicates dedups pairs that collide in several
-    bands (the screen is deterministic per pair, so screening before
-    the dedup is equivalent and strictly cheaper)."""
-    est_margin = 3.0 * (0.25 / num_hashes) ** 0.5
-    ms = F.array_sort(F.col("ms"))  # struct sort ⇒ by id (first field)
-    pair_arr = F.flatten(
-        F.transform(
-            ms,
-            lambda a, i: F.transform(
-                F.slice(ms, i + F.lit(2), F.greatest(F.size(ms) - i - 1, F.lit(0))),
-                lambda b: F.struct(
-                    a["id"].alias("id_a"),
-                    b["id"].alias("id_b"),
-                    (
-                        F.size(
-                            F.filter(
-                                F.zip_with(a["sig"], b["sig"], lambda x, y: x == y),
-                                lambda e: e,
-                            )
-                        )
-                        / F.lit(num_hashes)
-                    ).alias("est"),
+def _bucket_pairs(lists: DataFrame, members: str, pair) -> DataFrame:
+    """Every unordered pair of each row's ``members`` array, one output
+    row per pair carrying the fields of the struct ``pair(a, b)`` builds
+    (``id_a``/``id_b`` among them) — the join-free pair generator: one
+    groupBy gathers each bucket, higher-order expressions emit its
+    C(m,2) pairs, with no self-join re-shuffling the index.
+
+    The members are sorted once (struct order ⇒ by the leading ``id``
+    field), so positional slicing yields id_a ≤ id_b; the explicit
+    ``id_a < id_b`` filter then drops the (x, x) self-pairs a duplicated
+    id would otherwise produce, and any pair with a NULL id.
+
+    explode_OUTER, not explode: for an inner Generate over a computed
+    array attribute, InferFiltersFromGenerate adds ``size(arr)>0 AND
+    isnotnull(arr)`` below, and predicate pushdown inlines the WHOLE
+    expansion into that filter — re-evaluated, interpreted (20× on
+    ``winnow_containment_pairs``). Outer generates are exempt; their
+    NULL rows die at the id filter."""
+    arr = _let(
+        F.array_sort(members),
+        lambda ms: F.flatten(
+            F.transform(
+                ms,
+                lambda a, i: F.transform(
+                    F.slice(ms, i + 2, F.greatest(F.size(ms) - i - 1, F.lit(0))),
+                    lambda b: pair(a, b),
                 ),
-            ),
-        )
+            )
+        ),
     )
     return (
-        grouped.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.est")
-        # id_a < id_b (not just ≤, which the array_sort already gives):
-        # an input carrying duplicate ids — the library operator has no
-        # unique-id precondition; only the catalog entries canonicalize —
-        # puts two rows of the same id in one bucket, and the positional
-        # expansion would emit a (x, x) self-pair with est = 1 that
-        # survives exact verify. The old self-join's a.id < b.id guard,
-        # restored as a free filter inside the same projection stage.
-        .filter(
-            (F.col("est") >= jaccard_threshold - est_margin)
-            & (F.col("id_a") < F.col("id_b"))
+        lists.select(F.explode_outer(arr).alias("p"))
+        .select("p.*")
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def _bucket_pair_screen(
+    grouped: DataFrame,
+    num_hashes: int,
+    jaccard_threshold: float,
+    touching_new: bool = False,
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)`` of each bucket's members that
+    pass the signature-agreement screen: the fraction of agreeing
+    signature components estimates Jaccard with σ ≈ √(j(1-j)/k), so a
+    3σ margin below the threshold rejects only (almost surely)
+    sub-threshold pairs — 32 long comparisons per pair, evaluated inside
+    the projection, so rejected pairs are never exchanged.
+    dropDuplicates dedups pairs that collide in several bands (the
+    screen is deterministic per pair, so screening before the dedup is
+    equivalent and strictly cheaper).
+
+    ``touching_new``: members carry a boolean ``new`` field and only
+    pairs with at least one new member are kept (the incremental path)."""
+    est_margin = 3.0 * (0.25 / num_hashes) ** 0.5
+
+    def pair(a: Column, b: Column) -> Column:
+        est = F.size(
+            F.filter(
+                F.zip_with(a["sig"], b["sig"], lambda x, y: x == y),
+                lambda e: e,
+            )
+        ) / F.lit(num_hashes)
+        if touching_new:
+            # NULL for history-only pairs, which the screen then rejects
+            est = F.when(a["new"] | b["new"], est)
+        return F.struct(
+            a["id"].alias("id_a"), b["id"].alias("id_b"), est.alias("est")
         )
+
+    return (
+        _bucket_pairs(grouped, "ms", pair)
+        .filter(F.col("est") >= jaccard_threshold - est_margin)
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -417,13 +410,11 @@ def minhash_band_index(
     oracle's ``GROUP BY id`` shape (pinned in
     tests/test_dedup_similarity.py::test_minhash_duplicate_ids_*).
 
-    ``_shingled`` (private, for :func:`minhash_lsh_duplicates`): a
-    pre-computed — typically persisted — frame ``(id, sh)`` where
-    ``sh = array_distinct(char_shingles(text_col, shingle_size))`` over
-    the same rows; when given, the shingle projection here is skipped
-    and the exploded source reads it instead (bit-identical values: the
-    expression tree is the same, only evaluated once and shared with
-    the verify stage).
+    ``_shingled`` (private): the :func:`_shingle_once` frame ``(id, sh)``
+    over the same rows; when given, the shingle projection here is
+    skipped and the exploded source reads it instead (bit-identical
+    values: the expression tree is the same, only evaluated once and
+    shared with the verify stage).
     """
     rows_per_band = num_hashes // bands
     a, b = _perm_constants(num_hashes)
@@ -501,122 +492,21 @@ def minhash_band_index(
     ).select("id", "sig", "bb.band", "bb.bucket")
 
 
-def _cap_buckets(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    if max_bucket_size is None:
-        return banded
-    w = Window.partitionBy("band", "bucket")
-    return (
-        banded.withColumn("__bsz", F.count("*").over(w))
-        .filter(F.col("__bsz") <= max_bucket_size)
-        .drop("__bsz")
-    )
-
-
-def _signature_screen(
-    cand: DataFrame, num_hashes: int, jaccard_threshold: float
-) -> DataFrame:
-    """Cheap screen before exact verification: the fraction of agreeing
-    signature components estimates Jaccard with σ ≈ √(j(1-j)/k) (≈0.07
-    for k=32), so a 3σ margin below the threshold rejects only pairs
-    that are (almost surely) sub-threshold — comparing 32 longs instead
-    of intersecting ~|text| shingle sets per candidate."""
-    est_margin = 3.0 * (0.25 / num_hashes) ** 0.5
-    return (
-        cand.withColumn(
-            "__est",
-            F.size(
-                F.filter(
-                    F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                    lambda eq: eq,
-                )
-            )
-            / F.lit(num_hashes),
-        )
-        .filter(F.col("__est") >= jaccard_threshold - est_margin)
-        .select("id_a", "id_b")
-    )
-
-
 def _exact_verify(
-    est: DataFrame,
-    texts: DataFrame | None,
-    shingle_size: int,
-    jaccard_threshold: float,
-    prune_texts: bool = False,
-    shingled: DataFrame | None = None,
+    est: DataFrame, shingled: DataFrame, jaccard_threshold: float
 ) -> DataFrame:
-    """Exact shingle-Jaccard verification of candidate pairs against a
-    ``(id, text)`` source covering every candidate id.
+    """Exact shingle-Jaccard verification of candidate pairs
+    ``(id_a, id_b)``: each side joins its shingle set from ``shingled``,
+    a pre-computed ``(id, sh)`` frame covering every candidate id, and
+    pairs below ``jaccard_threshold`` are dropped. Output
+    ``(id_a, id_b, jaccard_sim)`` with the similarity rounded to 6
+    places.
 
-    The text source is ``_spread`` before shingling — the round-5 find:
-    a small/singly-split text source flows into the verify joins as ONE
-    partition, and when AQE broadcasts that side the shingle expressions
-    are evaluated inside the broadcast-exchange collect — serially, on
-    one core, once per join side. Measured at sf0.1: 3.4 s → 0.6 s for
-    the identical 253-pair output just by repartitioning the text
-    before the shingle projection. At 100 TB the scan has thousands of
-    splits and the spread is a no-op; it exists for the small-corpus /
-    collapsed-partition edge (same trap as SCALING.md §Parallelism
-    pinning).
-
-    ``prune_texts`` picks the verify shape by CANDIDATE DENSITY:
-
-    - False (default): shingle the full text source and hash-join the
-      candidate stream through it. Costs two full shingle passes (one
-      per join side — Spark compiles them independently), but
-      everything pipelines and nothing blocks. Right when candidates ≈
-      corpus (the 7.7%-duplicate bench corpus).
-    - True: persist the candidate pairs, semi-join the text source down
-      to candidate ids, shingle only those. Right when candidates ≪
-      corpus — the 100 TB production case (dup density a few %), where
-      two FULL shingle passes are the dominant cost and the pruned scan
-      touches a tiny fraction of rows. The pair OUTPUT is identical
-      either way (asserted in tests/test_dedup_similarity.py).
-
-    ``shingled``: a pre-computed (typically persisted) ``(id, sh)``
-    frame covering every candidate id; when given, ``texts`` is ignored
-    and no shingling happens here at all. This is how
-    ``minhash_lsh_duplicates`` shares ONE shingle pass between its
-    signature aggregation and both verify join sides (r13; see its
-    docstring for the measurement).
-
-    Measured non-lever (round 4, sf0.1, re-confirmed after the spread
-    fix): persisting the shingled frame *only for this stage* (2 passes
-    → 1) is neutral-to-worse end-to-end — the persist is a blocking
-    stage that serializes ~8M small shingle strings, while the
-    "duplicate" shingle passes run concurrently on otherwise-idle
-    threads. Sharing with the SIGNATURE pass too (3 → 1, the
-    ``shingled`` param) is what flips the sign — don't re-add a
-    verify-only persist without re-measuring."""
-    from pyspark import StorageLevel
-
-    if shingled is None:
-        texts = _spread(texts)
-        if prune_texts:
-            est = register_persisted(est.persist(StorageLevel.MEMORY_AND_DISK))
-            cand_ids = (
-                est.select(F.col("id_a").alias("id"))
-                .unionByName(est.select(F.col("id_b").alias("id")))
-                .distinct()
-            )
-            # no broadcast hint: candidate ids can be huge at 100 TB; AQE
-            # downgrades the semi-join to broadcast when they are small.
-            texts = texts.join(cand_ids, "id", "left_semi")
-        shingled = texts.select(
-            "id",
-            F.array_distinct(char_shingles(F.col("text"), shingle_size)).alias("sh"),
-        )
-    elif prune_texts:
-        # the shingles are already computed (shared with the signature
-        # stage), so pruning buys only a smaller join side, not skipped
-        # shingle work
-        est = register_persisted(est.persist(StorageLevel.MEMORY_AND_DISK))
-        cand_ids = (
-            est.select(F.col("id_a").alias("id"))
-            .unionByName(est.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        shingled = shingled.join(cand_ids, "id", "left_semi")
+    ``shingled`` is the caller's persisted shingle pass, shared with its
+    signature aggregation — persisting shingles for this stage ALONE
+    measured neutral-to-worse (round 4, sf0.1): the persist is a
+    blocking stage, while the per-side shingle passes it saves run
+    concurrently on otherwise-idle threads."""
     return (
         est.join(shingled.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(shingled.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -651,123 +541,72 @@ def minhash_lsh_duplicates_incremental(
     jaccard_threshold: float = 0.8,
     max_bucket_size: int | None = 10_000,
     portable: bool = False,
-    prune_verify_texts: bool = True,
 ) -> DataFrame:
     """Dedup an INGEST BATCH against an already-materialized LSH band
     index (``minhash_band_index`` output) plus within itself — the
     daily-ingestion pattern: history is never re-hashed, and its text is
-    scanned only for the candidate ids the band join surfaces.
+    scanned only for candidate ids.
 
     Returns pairs (id_a, id_b, jaccard_sim), id_a < id_b, where at least
-    one side is a new document. Ids must be unique across history ∪ new —
-    in particular history and batch id sets are assumed DISJOINT. That
-    assumption also scopes the r13 screen-before-dedup rewrite's
-    "output identical" claim (r13 advice): an id present in BOTH the
-    index and the batch with edited text carries two different
-    signatures through ``union_banded``, and the screen-first order
-    keeps a pair if ANY of its signature combinations passes where the
-    old dedup-first order screened one arbitrary surviving occurrence.
-    Under the documented disjointness precondition each id has exactly
-    one signature and the two orders are bit-identical.
-    ``history_texts`` is the historical ``(id_col, text_col)`` source used
-    for exact verification (candidate-id join → pruned/bloom-filtered
-    scan, not a full pass). The hash parameters MUST match the ones the
-    index was built with.
+    one side is a new document. Ids must be unique across history ∪ new
+    — in particular history and batch id sets are assumed DISJOINT.
+    ``history_texts`` is the historical ``(id_col, text_col)`` source
+    used for exact verification. The hash parameters MUST match the ones
+    the index was built with.
 
     Equivalence: on history H and batch N, this returns exactly the
-    pairs of ``minhash_lsh_duplicates(H ∪ N)`` that touch N (modulo the
-    bucket cap, which here applies to the union's bucket sizes the same
-    way). Proven in tests.
+    pairs of ``minhash_lsh_duplicates(H ∪ N)`` that touch N, bucket cap
+    included. Proven in tests.
 
-    The NEW batch is shingled ONCE (r13, the ``minhash_lsh_duplicates``
-    shared-persist lesson applied to the incremental path): one
-    persisted ``(id, sh)`` frame feeds the band-index signature
-    aggregation (``_shingled=``) and both exact-verify join sides, where
-    the batch previously re-shingled at the band index and once per
-    verify side for its candidate rows. History shingling is unchanged:
-    its shingles are not stored in the index, so the verify stage still
-    shingles exactly the candidate history rows (semi-join pruned when
-    ``prune_verify_texts``). Values are bit-identical — the same
-    expression tree, evaluated once.
+    It is the full-corpus pipeline restricted to pairs that touch the
+    batch:
+
+    1. the batch is shingled once (:func:`_shingle_once`) and banded;
+    2. ``index ∪ batch`` band rows are grouped by (band, bucket) exactly
+       as in :func:`minhash_bucket_groups`, each member flagged ``new``;
+       buckets without a new member are dropped before expansion;
+    3. :func:`_bucket_pair_screen` keeps screened pairs with a new side;
+    4. the candidate pairs are persisted and the history text is
+       semi-joined down to candidate ids before it is shingled — every
+       pair touches the small batch, so candidates ≪ history;
+    5. :func:`_exact_verify` over history ∪ batch shingles.
     """
     from pyspark import StorageLevel
 
-    sh_new = register_persisted(
-        _spread(new_df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(
-                char_shingles(F.col(text_col), shingle_size)
-            ).alias("sh"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sh_new = _shingle_once(new_df, text_col, id_col, shingle_size)
     new_banded = minhash_band_index(
         new_df, text_col, id_col, num_hashes, bands, shingle_size,
         portable=portable, _shingled=sh_new,
-    ).withColumn("__new", F.lit(True))
-    # persisted for the same two-sided-self-join reason as
-    # minhash_lsh_duplicates: without it the batch is re-hashed (and the
-    # index re-read) once per join side
-    union_banded = register_persisted(_cap_buckets(
-        index.select("id", "sig", "band", "bucket").withColumn("__new", F.lit(False)).unionByName(new_banded),
-        max_bucket_size,
-    ).persist(StorageLevel.MEMORY_AND_DISK))
-    a = union_banded.alias("a")
-    b = union_banded.alias("b")
-    # The signature screen runs BEFORE the pair dedup (r13, the
-    # simhash/LSH-top-k lesson, guide §2.3): the agreement estimate is
-    # a pure function of the two signatures, so every band-duplicate
-    # occurrence of a pair carries the identical value and filtering
-    # first is output-identical. The dedup exchange then carries
-    # (id_a, id_b) — 16 B of screen-passing ids — instead of two
-    # 32-long signature arrays (~530 B) for EVERY co-bucketed pair,
-    # and the dedup itself becomes a hash-aggregable distinct (array
-    # first() buffers forced a SortAggregate + extra Sort before).
-    est = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (F.col("a.__new") | F.col("b.__new")),
-        )
+    )
+    banded = (
+        index.select("id", "sig", "band", "bucket")
+        .withColumn("new", F.lit(False))
+        .unionByName(new_banded.withColumn("new", F.lit(True)))
+    )
+    grouped = _group_buckets(banded, max_bucket_size, "id", "sig", "new").filter(
+        F.exists("ms", lambda m: m["new"])
+    )
+    est = register_persisted(
+        _bucket_pair_screen(
+            grouped, num_hashes, jaccard_threshold, touching_new=True
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    cand_ids = (
+        est.select(F.col("id_a").alias("id"))
+        .unionByName(est.select(F.col("id_b").alias("id")))
+        .distinct()
+    )
+    # no broadcast hint: candidate ids can be huge at 100 TB; AQE
+    # downgrades the semi-join to broadcast when they are small.
+    sh_hist = (
+        _spread(history_texts.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
+        .join(cand_ids, "id", "left_semi")
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
+            "id",
+            F.array_distinct(char_shingles(F.col("text"), shingle_size)).alias("sh"),
         )
-        .transform(lambda c: _signature_screen(c, num_hashes, jaccard_threshold))
-        .dropDuplicates(["id_a", "id_b"])
     )
-    # The verify side is assembled HERE (not via _exact_verify's
-    # texts/prune path) so the batch half reads the sh_new persist while
-    # the history half keeps the prune-then-shingle order:
-    # prune_verify_texts defaults True HERE (unlike the full-corpus
-    # path) — every candidate pair touches the small batch, so
-    # candidates ≪ history and the semi-join makes "history text is
-    # scanned only for candidate ids" literally true.
-    hist_texts = _spread(
-        history_texts.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    )
-    if prune_verify_texts:
-        est = register_persisted(est.persist(StorageLevel.MEMORY_AND_DISK))
-        cand_ids = (
-            est.select(F.col("id_a").alias("id"))
-            .unionByName(est.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        # no broadcast hint: candidate ids can be huge at 100 TB; AQE
-        # downgrades the semi-join to broadcast when they are small.
-        hist_texts = hist_texts.join(cand_ids, "id", "left_semi")
-    shingled = hist_texts.select(
-        "id",
-        F.array_distinct(char_shingles(F.col("text"), shingle_size)).alias("sh"),
-    ).unionByName(sh_new)
-    return _exact_verify(
-        est, None, shingle_size, jaccard_threshold, shingled=shingled
-    )
+    return _exact_verify(est, sh_hist.unionByName(sh_new), jaccard_threshold)
 
 
 def minhash_lsh_dedup(
@@ -1278,28 +1117,17 @@ def winnow_containment_pairs(
     25-50 for source code) makes incidental collisions rare while any
     ≥ window+k-1 = 19-char shared run still guarantees a match.
     """
-    from ..functions.text import _let
-
-    # NULL ids dropped AT THE GATE (r09 five-way-stack find, seed 59):
-    # this is the catalog's ONE pair generator that expands pairs
-    # POSITIONALLY (array_sort + slice) instead of via a join or an
-    # id_a < id_b comparison, so nothing downstream would drop a NULL-id
-    # row the way SQL's NULL-propagating `<` does everywhere else
-    # (minhash's screen filter, bottomk's join condition, the oracles'
-    # a.doc_id < b.doc_id). A pair with an unattributable member is
-    # unactionable output; the divergence stayed latent until a NULL-id
-    # doc carried a HOT (skew-planted) text — unique-text NULL-id docs
-    # never cross the containment threshold with anyone.
+    # NULL ids dropped AT THE GATE (r09 five-way-stack find, seed 59): a
+    # pair with an unattributable member is unactionable output. The
+    # pair generator's id_a < id_b filter would drop such pairs too;
+    # filtering here also skips their fingerprinting.
     fps = _spread(df.filter(F.col(id_col).isNotNull())).select(
         F.col(id_col).alias("id"),
         winnow_fingerprints(F.col(text_col), k, window, portable=portable).alias("fp"),
     )
-    # explode_OUTER, not explode: for an inner Generate over a computed
-    # array attribute, InferFiltersFromGenerate adds `size(fp)>0 AND
-    # isnotnull(fp)` below, and predicate pushdown inlines the WHOLE
-    # fingerprint expression into that filter — 3 evaluations per row,
-    # interpreted (20× on this query). Outer generates are exempt from
-    # the rule; the null rows from empty arrays are dropped by a cheap
+    # explode_OUTER, not explode: the InferFiltersFromGenerate guard
+    # documented in _bucket_pairs (3 fingerprint evaluations per row
+    # otherwise); the null rows from empty arrays are dropped by a cheap
     # filter on the OUTPUT column instead.
     posted = fps.select(
         "id", F.size("fp").alias("n"), F.explode_outer("fp").alias("h")
@@ -1336,32 +1164,18 @@ def winnow_containment_pairs(
     if max_postings is not None:
         lists = lists.filter(F.size("ps") <= max_postings)
 
-    combos = _let(
-        F.array_sort("ps"),  # canonical id order → id_a < id_b by slicing
-        lambda arr: F.flatten(
-            F.transform(
-                arr,
-                lambda x, i: F.transform(
-                    F.slice(
-                        arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0))
-                    ),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"),
-                        y["id"].alias("id_b"),
-                        x["n"].alias("n_a"),
-                        y["n"].alias("n_b"),
-                    ),
-                ),
-            )
+    pairs = _bucket_pairs(
+        lists,
+        "ps",
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            x["n"].alias("n_a"),
+            y["n"].alias("n_b"),
         ),
     )
     return (
-        # explode_outer: same InferFiltersFromGenerate guard as above —
-        # an inner explode would re-expand the C(m,2) combo array twice
-        # more inside an inferred size/isnotnull filter
-        lists.select(F.explode_outer(combos).alias("pr"))
-        .filter(F.col("pr").isNotNull())
-        .groupBy("pr.id_a", "pr.id_b", "pr.n_a", "pr.n_b")
+        pairs.groupBy("id_a", "id_b", "n_a", "n_b")
         .agg(F.count("*").alias("shared"))
         .select(
             "id_a",

@@ -45,23 +45,41 @@ _NANOS_TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
 # the session catalog (the guide's §6 file-listing-cache point);
 # `register_views` has always done the same thing via temp views.
 #
-# r14 hygiene (r13 verdict item 5 + advice):
-# - mtime lives in the VALUE, so a regenerated dataset REPLACES its
-#   entry instead of growing the dict one entry per (path, mtime) —
-#   memo size is bounded by |sessions| x |paths| regardless of how
-#   often data is rewritten (unit-tested).
-# - id(spark) joins the key: sibling sessions from spark.newSession()
-#   share one applicationId but have session-scoped confs and temp-view
-#   isolation, so a memo hit must never hand one session a DataFrame
-#   bound to another.
-# - st_mtime_ns (not getmtime's float seconds): second-granularity
-#   filesystems would otherwise serve a stale plan for a same-second
-#   regeneration.
-# - _TABLE_MEMO_CAP backstops pathological session churn: the memo is
-#   cleared outright when it would exceed the cap (rebuilding a plan is
-#   ~100 ms; unbounded driver growth is the real hazard).
+# id(spark) joins the key: sibling sessions from spark.newSession()
+# share one applicationId but have session-scoped confs and temp-view
+# isolation, so a memo hit must never hand one session a DataFrame
+# bound to another.
 _TABLE_MEMO: dict[tuple, tuple[int, DataFrame]] = {}
-_TABLE_MEMO_CAP = 256
+_MEMO_CAP = 256
+
+
+def stamped_memo(memo: dict, key, path: str, build):
+    """``build()``, memoized in ``memo[key]`` for the current
+    ``st_mtime_ns`` of ``path`` — the one keying rule of the module
+    memos that cache per-file state (r14 hygiene, r13 verdict item 5):
+
+    - the stamp lives in the VALUE, so a regenerated file REPLACES its
+      entry instead of growing the dict one entry per (path, mtime);
+    - st_mtime_ns, not getmtime's float seconds: at current epochs a
+      float resolves only ~240 ns, so two in-place regenerations closer
+      than that would share one key and serve the stale entry;
+    - the memo is cleared outright when a new key would exceed
+      ``_MEMO_CAP`` (rebuilding an entry is cheap; unbounded driver
+      growth under session or dataset churn is the real hazard).
+
+    An unstat-able path is never memoized."""
+    try:
+        stamp = os.stat(path).st_mtime_ns
+    except OSError:
+        return build()
+    hit = memo.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = build()
+    if key not in memo and len(memo) >= _MEMO_CAP:
+        memo.clear()
+    memo[key] = (stamp, value)
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -72,25 +90,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # consulted at execution, and a caller may have flipped it back.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        for c in nanos_cols:
+            if dict(df.dtypes).get(c) == "bigint":
+                df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+        return df
+
     try:
         key = (spark.sparkContext.applicationId, id(spark), path)
-        mtime_ns = os.stat(path).st_mtime_ns
     except Exception:
-        key = None
-        mtime_ns = -1
-    if key is not None:
-        hit = _TABLE_MEMO.get(key)
-        if hit is not None and hit[0] == mtime_ns:
-            return hit[1]
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        if dict(df.dtypes).get(c) == "bigint":
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-    if key is not None:
-        if key not in _TABLE_MEMO and len(_TABLE_MEMO) >= _TABLE_MEMO_CAP:
-            _TABLE_MEMO.clear()
-        _TABLE_MEMO[key] = (mtime_ns, df)
-    return df
+        return read()
+    return stamped_memo(_TABLE_MEMO, key, path, read)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

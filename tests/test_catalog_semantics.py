@@ -251,6 +251,35 @@ def test_id_canonicalization_null_keys(spark, tmp_path):
     assert None in sp
 
 
+def test_key_unique_memo_sees_regeneration_1ns_apart(spark, tmp_path):
+    """The NDV-probe memo is stamped with st_mtime_ns: a documents table
+    regenerated in place with a duplicated doc_id must re-probe even when
+    the two versions' mtimes are 1 ns apart (float getmtime seconds
+    collapse them to one key and kept the stale "unique" verdict,
+    skipping the canonicalizing window)."""
+    import os
+
+    from alibaba_cppfeaturestore_spark.plans.catalog import _key_is_unique
+
+    d = str(tmp_path)
+    path = f"{d}/documents.parquet"
+    stamp = 1_700_000_000_000_000_000
+
+    def write(ids):
+        spark.createDataFrame(
+            [(i, f"text {i}") for i in ids], "doc_id long, text string"
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    df = write([1, 2, 3])
+    os.utime(path, ns=(stamp, stamp))
+    assert _key_is_unique(df, d, "documents", "doc_id") is True
+    assert _key_is_unique(df, d, "documents", "doc_id") is True  # memo hit
+    df = write([1, 2, 2])
+    os.utime(path, ns=(stamp + 1, stamp + 1))
+    assert _key_is_unique(df, d, "documents", "doc_id") is False
+
+
 def test_pivot_zero_fills_empty_cells(run, spark, tmp_path):
     # r09 five-way-stack find (seed 71): a pivot cell with NO source rows
     # is NULL by construction in Spark (the in-agg expression never

@@ -15,6 +15,7 @@ from alibaba_cppfeaturestore_spark.operators.dedup import (
     minhash_lsh_dedup,
     minhash_lsh_duplicates,
     simhash_duplicates,
+    winnow_containment_pairs,
 )
 from alibaba_cppfeaturestore_spark.operators.similarity import (
     brute_force_topk,
@@ -82,16 +83,26 @@ def test_minhash_finds_planted_near_dups(spark, docs):
     assert len(kept_ids) >= 48
 
 
-def test_minhash_duplicate_ids_emit_no_self_pairs(spark, docs):
-    """minhash_lsh_duplicates has no unique-id precondition (only the
+@pytest.mark.parametrize(
+    "pairs_of",
+    [
+        lambda df: minhash_lsh_duplicates(
+            df, num_hashes=32, bands=4, jaccard_threshold=0.7
+        ),
+        lambda df: winnow_containment_pairs(df, k=5, window=4, threshold=0.5),
+    ],
+    ids=["minhash", "winnow"],
+)
+def test_minhash_duplicate_ids_emit_no_self_pairs(spark, docs, pairs_of):
+    """Neither pair generator has a unique-id precondition (only the
     catalog entries canonicalize): two rows sharing an id land in the
-    same bucket, and the positional pair expansion must not emit an
-    (x, x) self-pair — it would survive exact verify with J = 1."""
+    same bucket / posting list, and the positional pair expansion must
+    not emit an (x, x) self-pair — it would survive verification with
+    similarity 1."""
     base = docs.limit(20)
     dup_ids = base.unionByName(base)  # every id appears twice, same text
-    pairs = minhash_lsh_duplicates(
-        dup_ids, num_hashes=32, bands=4, jaccard_threshold=0.7
-    ).collect()
+    pairs = pairs_of(dup_ids).collect()
+    assert pairs  # docs 8 and 12 still pair
     assert all(r["id_a"] < r["id_b"] for r in pairs)
 
 
@@ -381,9 +392,12 @@ def test_ivf_greedy_topk_recall_determinism_and_edges(spark):
     assert set(degraded.columns) == {"query_id", "neighbor_id", "cosine_sim"}
 
 
-def test_incremental_minhash_matches_full_corpus(spark, docs):
+@pytest.mark.parametrize("max_bucket_size", [10_000, 3, 2])
+def test_incremental_minhash_matches_full_corpus(spark, docs, max_bucket_size):
     """Incremental dedup of a batch against a materialized band index ==
-    the full-corpus pairs restricted to pairs touching the batch."""
+    the full-corpus pairs restricted to pairs touching the batch, under
+    the default bucket cap and under tight ones (the corpus's largest
+    buckets hold 3 docs — 8, 12 and 10008 — so cap 2 drops them)."""
     from alibaba_cppfeaturestore_spark.operators.dedup import (
         minhash_band_index,
         minhash_lsh_duplicates_incremental,
@@ -401,7 +415,10 @@ def test_incremental_minhash_matches_full_corpus(spark, docs):
     )
     batch = batch.unionByName(extra)
 
-    kw = dict(num_hashes=32, bands=4, jaccard_threshold=0.7)
+    kw = dict(
+        num_hashes=32, bands=4, jaccard_threshold=0.7,
+        max_bucket_size=max_bucket_size,
+    )
     full = minhash_lsh_duplicates(history.unionByName(batch), **kw)
     batch_ids = {r["doc_id"] for r in batch.collect()}
     expected = {
@@ -418,7 +435,8 @@ def test_incremental_minhash_matches_full_corpus(spark, docs):
         ).collect()
     }
     assert got == expected
-    assert len(got) >= 11  # 10 cross-pairs + the fresh in-batch pair
+    if max_bucket_size >= 3:
+        assert len(got) >= 11  # the 10 cross-pairs + (12, 10008)
     # no history-history pairs leak in
     assert all(a in batch_ids or b in batch_ids for a, b, _ in got)
 
@@ -685,30 +703,6 @@ def test_portable_simhash_finds_planted_near_dups(spark, docs):
     recall = len(found & planted) / len(planted)
     assert recall >= 0.5, f"portable simhash recall too low: {recall}"
     assert all(0 <= r["hamming"] <= 3 for r in rows)
-
-
-def test_verify_prune_shape_output_identical(spark, docs):
-    """prune_verify_texts changes the verify PLAN (shingle only
-    candidate rows behind a semi-join) but never the output — the
-    candidate set and the per-pair exact Jaccard are shape-independent."""
-    base = docs.limit(50)
-    mutants = base.select(
-        (F.col("doc_id") + 10_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
-    corpus = base.unionByName(mutants)
-    kw = dict(num_hashes=32, bands=4, jaccard_threshold=0.7)
-    plain = {
-        (r["id_a"], r["id_b"]): r["jaccard_sim"]
-        for r in minhash_lsh_duplicates(corpus, **kw).collect()
-    }
-    pruned = {
-        (r["id_a"], r["id_b"]): r["jaccard_sim"]
-        for r in minhash_lsh_duplicates(
-            corpus, prune_verify_texts=True, **kw
-        ).collect()
-    }
-    assert plain == pruned
 
 
 def test_lloyd_assign_matches_numpy_argmin(spark):

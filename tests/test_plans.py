@@ -279,6 +279,23 @@ def test_null_policy_filters_reach_the_scan(plans):
         assert "IsNotNull(value)" in plans[n], f"{n}:\n{plans[n]}"
 
 
+def test_pair_generators_stay_hash_aggregated(plans):
+    # r13 screened pairs before their dedup and shuffled bare ids, which
+    # removed 24 SortAggregates (array-valued first() buffers force the
+    # sort-based aggregate) from these candidate-pair plans; none may
+    # come back.
+    for n in [
+        "dedup_minhash_lsh",
+        "dedup_minhash_incremental",
+        "dedup_simhash",
+        "dedup_ngram_jaccard_indexed",
+        "dedup_winnow_containment",
+        "dedup_bottomk_sketch",
+        "ann_lsh_bucketed_topk",
+    ]:
+        assert "SortAggregate" not in plans[n], f"{n}:\n{plans[n]}"
+
+
 def test_table_memo_bounded_and_session_isolated(spark, tmp_path):
     # r13 verdict item 5 + advice: regenerating a dataset N times holds
     # the memo size CONSTANT (mtime lives in the value, not the key);
